@@ -331,9 +331,9 @@ object Bench {
             in.withColumn("sha_fixture", col("content_sha256"))).violations
         // fingerprint on the digest column, not raw content (content_sha256
         // already determines content — it IS validated against it), recorded
-        // at STAGE time as the per-bucket sidecar: the ingest pays one narrow
-        // scan, and every incremental run selects changed buckets from 64
-        // sidecar rows with no table scan — the Iceberg-manifest-stats role
+        // at STAGE time as the per-bucket sidecar from the staging aggregate,
+        // so every incremental run selects changed buckets from 64 sidecar
+        // rows with no table scan — the Iceberg-manifest-stats role
         val incRowHash = xxhash64(
           col("id"), col("repo"), col("path"), col("commit"), col("lang"),
           col("content_sha256"))
@@ -343,7 +343,8 @@ object Bench {
         // host — CLAUDE.md): each full rep resets manifest+out so everything
         // is pending again; each delta rep re-stages bucket 0 with a fresh
         // content marker so exactly that bucket is pending again (the
-        // re-stage itself is untimed — ingest, not validation).
+        // re-stage, a delta restage of that one bucket, is untimed — ingest,
+        // not validation).
         val incReps = sys.env.getOrElse("SPARK_GRAFT_INC_REPS", "2").toInt
         val fs = new org.apache.hadoop.fs.Path(incRoot)
           .getFileSystem(s.sparkContext.hadoopConfiguration)

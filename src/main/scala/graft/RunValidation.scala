@@ -27,10 +27,17 @@ import org.apache.spark.sql.functions._
   *   [--bucket-keys commit]             // its bucket key(s); default commit
   * }}}
   *
-  * Scale shape: staging is one partitioned write (+ a narrow fingerprint
-  * sidecar when --incremental, so later runs select changed buckets from
-  * per-bucket stats, never a table scan); validation is the one-write-job
-  * bucket runner; suite checks are single-pass aggregates / anti-joins.
+  * Scale shape: a first staging is one partitioned write. With
+  * --incremental, one aggregate over the input also yields per-bucket row
+  * counts, validation fingerprints and layout fingerprints (over every
+  * column), which become the fingerprint sidecar; a --restage then rewrites
+  * only the staged buckets whose layout fingerprint changed and deletes
+  * the ones left empty, so a new snapshot costs two reads of the input and
+  * a write of what changed (a changed bucket count or input schema
+  * restages in full). Validation selects changed buckets from the sidecar,
+  * never a table scan, and is the one-write-job bucket runner. Suite checks
+  * are single-pass aggregates / anti-joins over the whole staged table, and
+  * --bucketed-table rebuilds its copy in full on every --restage.
   */
 object RunValidation {
 
@@ -138,11 +145,12 @@ object RunValidation {
       val withSha =
         if (in.columns.contains("content_sha256")) in
         else in.withColumn("content_sha256", sha2(col("content"), 256))
-      // fingerprint rides the digest column, not raw content — the narrow
-      // sidecar scan is the point of staging-time fingerprints. Contract: a
-      // SUPPLIED content_sha256 must track content (it is both the parity
-      // fixture and the change signal); a stale digest hides the change from
-      // incremental selection exactly as it would from the parity check
+      // the validation fingerprint rides the digest column, not raw
+      // content. Contract: a SUPPLIED content_sha256 must track content (it
+      // is both the parity fixture and the change signal); a stale digest
+      // hides the change from incremental selection exactly as it would from
+      // the parity check. The staged layout itself never trusts it: stage()
+      // fingerprints every column to decide which buckets to rewrite
       val rowHash =
         if (a.incremental)
           Some(xxhash64((keys ++ Seq("commit", "lang", "content_sha256")).map(col): _*))

@@ -1,6 +1,6 @@
 package graft.checkpoint
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,37 +35,111 @@ object CheckpointedRunner {
     StructField("status", StringType),
     StructField("fingerprint", LongType)))
 
-  /** One-time layout pass: bucket the input by key hash and write it
-    * partitioned by bucket (lineage root for all later runs). */
-  def stage(df: DataFrame, keyCols: Seq[String], numBuckets: Int, stagingDir: String): Unit =
-    stage(df, keyCols, numBuckets, stagingDir, rowHash = None)
-
-  /** [[stage]] that also records a per-bucket fingerprint SIDECAR
-    * (`_fingerprints/` — underscore-prefixed, so data reads skip it): the
-    * ingest pays one narrow post-write scan, and every later
-    * [[incrementalRun]] selects changed buckets from the 1-row-per-bucket
-    * sidecar instead of re-scanning the table — the role Iceberg manifest
-    * stats play. A static-overwrite re-stage wipes the sidecar with the rest
-    * of the layout, so it can never go stale. */
+  /** Lays the input out partitioned by its bucket id (the lineage root for
+    * all later runs).
+    *
+    * Without `rowHash`, every call is a full STATIC overwrite of the layout
+    * (and so wipes any fingerprint sidecar).
+    *
+    * With `rowHash`, one aggregate over the input yields per bucket
+    * `n_rows`, the validation `fingerprint` (bit_xor of `rowHash`) and a
+    * layout fingerprint over ALL input columns (see [[layoutHash]]). The
+    * collected stats become the fingerprint SIDECAR (`_fingerprints/`,
+    * underscore-prefixed so data reads skip it), from which every later
+    * [[incrementalRun]] selects changed buckets without a table scan — the
+    * role Iceberg manifest stats play. A re-stage over a sidecar written
+    * for the same bucket count, keys and input schema is a DELTA restage:
+    * it deletes the staged directories of buckets that have no rows now and
+    * rewrites, in one dynamic-partition-overwrite write, only the buckets
+    * whose (n_rows, layout fingerprint) differ from the sidecar's. Any other
+    * state (no sidecar, an older sidecar without layout fingerprints, a
+    * different bucket count, key set or input schema) takes the full
+    * static overwrite.
+    *
+    * Invariant: a sidecar on disk describes the staged layout exactly. The
+    * sidecar is deleted before any data file is touched and written last,
+    * so a kill in between leaves no sidecar: the next re-stage is then full
+    * and [[incrementalRun]] falls back to its fingerprint scan. After any
+    * sequence of re-stages the layout holds the same rows per bucket as a
+    * full re-stage of the last snapshot. */
   def stage(
       df: DataFrame, keyCols: Seq[String], numBuckets: Int, stagingDir: String,
-      rowHash: Option[Column]): Unit = {
-    df.withColumn("bucket",
-        pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets)).cast(IntegerType))
-      .write.mode(SaveMode.Overwrite)
+      rowHash: Option[Column] = None): Unit = {
+    val bucketed = df.withColumn("bucket", bucketExpr(keyCols, numBuckets))
+    def writeAll(): Unit = bucketed.write.mode(SaveMode.Overwrite)
       // STATIC overwrite per-write: a full snapshot replaces the whole staged
       // layout, including buckets that have no rows in the new snapshot
       // (run() sets the session to dynamic mode, which would otherwise leave
       // disappeared buckets' old partitions in place on re-stage)
       .option("partitionOverwriteMode", "static")
       .partitionBy("bucket").parquet(stagingDir)
-    rowHash.foreach { h =>
-      val spark = df.sparkSession
-      bucketFingerprints(spark.read.parquet(stagingDir), h)
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$stagingDir/$FingerprintSidecar")
+    rowHash match {
+      case None => writeAll()
+      case Some(h) =>
+        val spark = df.sparkSession
+        val layout = s"$numBuckets|${keyCols.mkString(",")}|${df.schema.toDDL}"
+        val stats = bucketed.groupBy("bucket")
+          .agg(count(lit(1)).as("n_rows"), bit_xor(h).as("fingerprint"),
+            bit_xor(layoutHash(df)).as("layout_fingerprint"))
+          .collect().map(r => Row(r.getInt(0), r.getLong(1), r.get(2), r.getLong(3), layout))
+        val current = stats.map(r => r.getInt(0) -> (r.getLong(1), r.getLong(3))).toMap
+        val root = new org.apache.hadoop.fs.Path(stagingDir)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val sidecar = new org.apache.hadoop.fs.Path(root, FingerprintSidecar)
+        val previous = stagedLayout(spark, fs, sidecar, layout)
+        fs.delete(sidecar, true)
+        previous match {
+          case None => writeAll()
+          case Some(prev) =>
+            fs.listStatus(root).iterator.map(_.getPath)
+              .filter(_.getName.startsWith("bucket="))
+              .filterNot(p => current.contains(p.getName.stripPrefix("bucket=").toInt))
+              .foreach(fs.delete(_, true))
+            val changed = current.collect { case (b, s) if !prev.get(b).contains(s) => b }
+            if (changed.nonEmpty)
+              bucketed.filter(col("bucket").isin(changed.toSeq: _*))
+                .write.mode(SaveMode.Overwrite)
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket").parquet(stagingDir)
+        }
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(stats.toSeq.asJava, sidecarSchema)
+          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(sidecar.toString)
     }
   }
+
+  /** The fingerprint sidecar: [[incrementalRun]] reads `bucket`, `n_rows`
+    * and `fingerprint` by position; `layout_fingerprint` and `layout`
+    * (bucket count, keys and input schema) let [[stage]] restage a delta. */
+  private val sidecarSchema: StructType = StructType(Seq(
+    StructField("bucket", IntegerType, nullable = false),
+    StructField("n_rows", LongType, nullable = false),
+    StructField("fingerprint", LongType),
+    StructField("layout_fingerprint", LongType),
+    StructField("layout", StringType)))
+
+  /** Per-bucket (n_rows, layout fingerprint) of the staged layout the
+    * sidecar describes, when it was staged with `layout`; None when a
+    * delta restage cannot trust it (no or empty sidecar, one without layout
+    * fingerprints, or a different bucket count, key set or input schema). */
+  private def stagedLayout(
+      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      sidecar: org.apache.hadoop.fs.Path, layout: String): Option[Map[Int, (Long, Long)]] =
+    if (!fs.exists(sidecar)) None
+    else {
+      val rows = spark.read.schema(sidecarSchema).parquet(sidecar.toString)
+        .select("bucket", "n_rows", "layout_fingerprint", "layout").collect()
+      if (rows.isEmpty || rows.exists(r => r.isNullAt(2) || r.getString(3) != layout)) None
+      else Some(rows.map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap)
+    }
+
+  /** Row hash of the staged layout: xxhash64 over every input column in
+    * sorted-name order, each followed by its null flag (xxhash64 skips
+    * nulls, so without the flags a value moving between two columns would
+    * hash the same). It reads every column, content included: trusting a
+    * supplied digest column would let a stale digest keep stale content. */
+  private def layoutHash(df: DataFrame): Column =
+    xxhash64(df.columns.sorted.toSeq.flatMap(c => Seq(col(c), col(c).isNull)): _*)
 
   /** Hidden sidecar directory name (underscore => invisible to data reads). */
   val FingerprintSidecar: String = "_fingerprints"

@@ -62,6 +62,18 @@ object Checks {
   // Map-side partial counting makes this one shuffle of (key, partial-count),
   // not of full rows; AQE coalesces post-shuffle partitions.
   // --------------------------------------------------------------------------
+  /** Key tuples that occur more than once, with their `dup_count`.
+    *
+    * Nullable keys: a null matches only a null in the same key position, as
+    * in SQL `GROUP BY` (`UNIQUE NULLS NOT DISTINCT`). In the terms of Wei,
+    * Leck and Link, "Entity Integrity, Referential Integrity, and Query
+    * Optimization with Embedded Uniqueness Constraints" (ICDE 2019): every
+    * pair that violates the possible key p⟨K⟩ (equal and non-null on all of
+    * K) is reported; a pair that violates only the certain key c⟨K⟩ (equal
+    * where both are non-null, a null against a value elsewhere) is not; and
+    * a pair with nulls in the same positions is reported, although p⟨K⟩
+    * allows it. On rows with no null in K this is exactly the uniqueness
+    * constraint on K. [[uniquenessPrePartitioned]] reads nulls the same way. */
   def uniqueness(df: DataFrame, keys: Seq[String]): DataFrame = {
     // Two-level exact check. A direct groupBy(keys) shuffles every wide key
     // tuple (~100+ bytes of strings per row); instead shuffle ONE 8-byte
@@ -88,7 +100,7 @@ object Checks {
     * (PlanSpec pins the exchange-free plan). Same output shape and values as
     * [[uniqueness]]; on a NON-bucketed input it still returns the right
     * answer but shuffles the full wide key tuples — prefer [[uniqueness]]'s
-    * 8-byte-hash pre-screen there. */
+    * 8-byte-hash pre-screen there. Null keys read as in [[uniqueness]]. */
   def uniquenessPrePartitioned(df: DataFrame, keys: Seq[String]): DataFrame =
     df.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("dup_count"))

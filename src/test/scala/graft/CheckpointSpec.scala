@@ -231,6 +231,169 @@ class CheckpointSpec extends SparkSpec {
     assert(!new java.io.File(s"$staging/${CheckpointedRunner.FingerprintSidecar}").exists())
   }
 
+  private val keys = Seq("repo", "path")
+  private val rh = Some(xxhash64(col("repo"), col("path"), col("commit"), col("content_sha256")))
+
+  /** The staged table as an exact frame: columns by name, rows sorted. */
+  private def layoutRows(staging: String): Seq[org.apache.spark.sql.Row] = {
+    val d = spark.read.parquet(staging)
+    val cs = d.columns.sorted.toSeq.map(col)
+    d.select(cs: _*).orderBy(cs: _*).collect().toSeq
+  }
+
+  /** Data files per staged bucket: (name, length). */
+  private def bucketFiles(staging: String): Map[Int, Set[(String, Long)]] =
+    new java.io.File(staging).listFiles().toSeq
+      .filter(_.getName.startsWith("bucket="))
+      .map(d => d.getName.stripPrefix("bucket=").toInt ->
+        d.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+          .map(f => f.getName -> f.length()).toSet)
+      .toMap
+
+  /** The layout a plain full stage of `df` writes. */
+  private def fullStage(df: DataFrame, buckets: Int = numBuckets): Seq[org.apache.spark.sql.Row] = {
+    val dir = s"${tmp()}/full"
+    CheckpointedRunner.stage(df, keys, buckets, dir)
+    layoutRows(dir)
+  }
+
+  private def sidecarDir(staging: String) = s"$staging/${CheckpointedRunner.FingerprintSidecar}"
+
+  test("delta restage: only changed/added buckets rewritten, removed deleted; layout equals a full restage") {
+    val staging = s"${tmp()}/staging"
+    val bucketOf = CheckpointedRunner.bucketExpr(keys, numBuckets)
+    val all = CodeTable.generate(spark, 3000)
+    def edit(df: DataFrame, b: Int, mark: String) = df
+      .withColumn("content",
+        when(bucketOf === b, concat(col("content"), lit(mark))).otherwise(col("content")))
+      .withColumn("content_sha256", sha2(col("content"), 256))
+    // snapshot 0 has no bucket 5; snapshot 1 adds it, removes bucket 2 and
+    // edits bucket 4; snapshot 2 edits bucket 4 again but leaves its digest
+    // column stale, then snapshot 0 comes back
+    val s0 = all.filter(bucketOf =!= 5)
+    val s1 = edit(all.filter(bucketOf =!= 2), 4, " v1")
+    val s2 = edit(all.filter(bucketOf =!= 2), 4, " v1")
+      .withColumn("content", when(bucketOf === 4, concat(col("content"), lit(" v2")))
+        .otherwise(col("content")))
+    CheckpointedRunner.stage(s0, keys, numBuckets, staging, rh)
+    val before = bucketFiles(staging)
+    assert(before.keySet === (0 until numBuckets).toSet - 5)
+
+    CheckpointedRunner.stage(s1, keys, numBuckets, staging, rh)
+    val after = bucketFiles(staging)
+    assert(after.keySet === (0 until numBuckets).toSet - 2)
+    val untouched = (0 until numBuckets).toSet -- Set(2, 4, 5)
+    untouched.foreach(b => assert(after(b) === before(b), s"bucket $b was rewritten"))
+    assert((after(4).map(_._1) intersect before(4).map(_._1)).isEmpty, "bucket 4 not rewritten")
+    assert(layoutRows(staging) === fullStage(s1))
+
+    // a stale digest column must not hide a content change from the layout
+    CheckpointedRunner.stage(s2, keys, numBuckets, staging, rh)
+    val afterStale = bucketFiles(staging)
+    (untouched + 5).foreach(b => assert(afterStale(b) === after(b), s"bucket $b was rewritten"))
+    assert(layoutRows(staging) === fullStage(s2))
+
+    CheckpointedRunner.stage(s0, keys, numBuckets, staging, rh)
+    assert(layoutRows(staging) === fullStage(s0))
+    // the sidecar built from the input aggregate equals a rescan of the layout
+    val sidecar = spark.read.parquet(sidecarDir(staging)).select("bucket", "n_rows", "fingerprint")
+    val rescan = CheckpointedRunner.bucketFingerprints(spark.read.parquet(staging), rh.get)
+    assert(sidecar.orderBy("bucket").collect().toSeq === rescan.orderBy("bucket").collect().toSeq)
+    // the same snapshot again rewrites nothing
+    val settled = bucketFiles(staging)
+    CheckpointedRunner.stage(s0, keys, numBuckets, staging, rh)
+    assert(bucketFiles(staging) === settled)
+  }
+
+  test("delta restage falls back to a full rewrite: no sidecar, old sidecar, other bucket count, added or renamed column") {
+    val staging = s"${tmp()}/staging"
+    val df = CodeTable.generate(spark, 2000)
+    def fullRewrite(next: DataFrame, buckets: Int = numBuckets)(breakSidecar: => Unit): Unit = {
+      CheckpointedRunner.stage(df, keys, numBuckets, staging, rh)
+      val before = bucketFiles(staging).values.flatten.map(_._1).toSet
+      breakSidecar
+      CheckpointedRunner.stage(next, keys, buckets, staging, rh)
+      val after = bucketFiles(staging).values.flatten.map(_._1).toSet
+      assert((after intersect before).isEmpty, "a data file survived the restage")
+      assert(layoutRows(staging) === fullStage(next, buckets))
+    }
+    val sidecarPath = new org.apache.hadoop.fs.Path(sidecarDir(staging))
+    def fs = sidecarPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fullRewrite(df)(fs.delete(sidecarPath, true))
+    fullRewrite(df) { // the 3-column sidecar of earlier releases
+      CheckpointedRunner.bucketFingerprints(spark.read.parquet(staging), rh.get)
+        .coalesce(1).write.mode("overwrite").parquet(sidecarDir(staging))
+    }
+    fullRewrite(df, buckets = 4)(())
+    fullRewrite(df.withColumn("extra", lit(1)))(())
+    // a renamed column hashes like the old one: only the recorded schema
+    // tells the layouts apart
+    fullRewrite(df.withColumnRenamed("lang", "lang2"))(())
+    // and a restage over an intact sidecar of the same layout rewrites nothing
+    CheckpointedRunner.stage(df, keys, numBuckets, staging, rh)
+    val settled = bucketFiles(staging)
+    CheckpointedRunner.stage(df, keys, numBuckets, staging, rh)
+    assert(bucketFiles(staging) === settled)
+  }
+
+  test("kill after the sidecar delete: the next restage is full and ends in the same layout") {
+    val root = tmp()
+    val staging = s"$root/staging"
+    val bucketOf = CheckpointedRunner.bucketExpr(keys, numBuckets)
+    val s0 = CodeTable.generate(spark, 2000)
+    val s1 = s0.filter(bucketOf =!= 3)
+      .withColumn("content", when(bucketOf === 6, concat(col("content"), lit(" v1")))
+        .otherwise(col("content")))
+      .withColumn("content_sha256", sha2(col("content"), 256))
+    CheckpointedRunner.stage(s0, keys, numBuckets, staging, rh)
+    CheckpointedRunner.incrementalRun(spark, staging, s"$root/m", s"$root/out", numBuckets,
+      process, Seq("repo", "path", "constraint_id"), runId = "k-a", keyCols = keys)
+    // the delta restage of s1 killed mid-write: sidecar gone, bucket 6
+    // rewritten, removed bucket 3 still on disk
+    new org.apache.hadoop.fs.Path(sidecarDir(staging))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(sidecarDir(staging)), true)
+    s1.withColumn("bucket", bucketOf).filter(col("bucket") === 6)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").parquet(staging)
+    // incrementalRun on the half-written layout falls back to its scan
+    assert(CheckpointedRunner.incrementalRun(spark, staging, s"$root/m", s"$root/out", numBuckets,
+      process, Seq("repo", "path", "constraint_id"), runId = "k-b", keyCols = keys,
+      rowHash = rh) === Seq(6))
+    CheckpointedRunner.stage(s1, keys, numBuckets, staging, rh)
+    assert(layoutRows(staging) === fullStage(s1))
+    assert(spark.read.parquet(sidecarDir(staging)).count() === numBuckets - 1)
+  }
+
+  test("empty snapshot on the full and the delta path: every bucket's output deleted and committed as removed") {
+    val df = CodeTable.generate(spark, 1500)
+    for (delta <- Seq(false, true)) {
+      val root = tmp()
+      val staging = s"$root/staging"; val out = s"$root/out"; val m = s"$root/m"
+      // the delta path needs a sidecar from the previous stage; without one
+      // the restage is full
+      CheckpointedRunner.stage(df, keys, numBuckets, staging, if (delta) rh else None)
+      val first = CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+        process, Seq("repo", "path", "constraint_id"), runId = "z-a", keyCols = keys, rowHash = rh)
+      assert(first === (0 until numBuckets))
+      val written = new java.io.File(out).listFiles().map(_.getName)
+        .filter(_.startsWith("bucket=")).map(_.stripPrefix("bucket=").toInt).toSet
+      assert(written.nonEmpty)
+      CheckpointedRunner.stage(df.limit(0), keys, numBuckets, staging, rh)
+      assert(bucketFiles(staging).isEmpty, s"delta=$delta")
+      assert(CheckpointedRunner.incrementalRun(spark, staging, m, out, numBuckets,
+        process, Seq("repo", "path", "constraint_id"), runId = "z-b", keyCols = keys,
+        rowHash = rh).isEmpty)
+      assert(!new java.io.File(out).listFiles().exists(_.getName.startsWith("bucket=")))
+      val removed = spark.read.schema(CheckpointedRunner.manifestSchema).parquet(m)
+        .filter(col("run_id") === "z-b")
+        .select("bucket", "rows", "violations").collect().toSeq
+      assert(removed.size === written.size && removed.map(_.getInt(0)).toSet === written,
+        s"delta=$delta")
+      assert(removed.forall(r => r.getLong(1) == 0L && r.getLong(2) == 0L))
+    }
+  }
+
   test("run history: one lineage+metrics row per invocation over the append-only manifest") {
     val root = tmp()
     val staging = s"$root/staging"; val out = s"$root/out"; val m = s"$root/m"

@@ -53,6 +53,29 @@ class SuiteSpec extends SparkSpec {
     assert(viols.columns.toSeq === Seq("repo", "path", "commit", "constraint_id", "reason"))
   }
 
+  test("N5 uniqueness with null keys: a null matches only a null in the same position, on both paths") {
+    val keys = Seq("repo", "path", "commit")
+    val rows = Seq(
+      (Some("r"), Some("a"), Some("c1")), (Some("r"), Some("a"), Some("c1")),
+      (Some("r"), None, Some("c1")), (Some("r"), None, Some("c1")), (Some("r"), None, Some("c1")),
+      // a certain-key violation only (a null against "c1"): not reported
+      (Some("r"), Some("a"), None),
+      // nulls in different positions: distinct, though xxhash64 skips nulls
+      // and gives both the same hash
+      (Some("r"), Some("b"), None), (Some("r"), None, Some("b")),
+      (None, None, None), (None, None, None))
+    val df = rows.toDF(keys: _*)
+    val hashes = df.filter(col("path") === "b" || col("commit") === "b")
+      .select(xxhash64(keys.map(col): _*)).distinct().count()
+    assert(hashes === 1L)
+    val expected = Seq(
+      org.apache.spark.sql.Row(null, null, null, 2L),
+      org.apache.spark.sql.Row("r", null, "c1", 3L),
+      org.apache.spark.sql.Row("r", "a", "c1", 2L))
+    for (check <- Seq(Checks.uniqueness _, Checks.uniquenessPrePartitioned _))
+      assert(check(df, keys).orderBy(keys.map(col): _*).collect().toSeq === expected)
+  }
+
   test("N6 referential: broadcast and salted sort-merge agree on planted dangling commits") {
     val expected = (0L until N).map(i =>
       if (i % 79 == 0) (if (i % 101 == 0) 2L else 1L) else 0L).sum
